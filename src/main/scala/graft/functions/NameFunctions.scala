@@ -24,6 +24,12 @@ object NameFunctions {
     concat_ws("/", lit("sidestream"),
       substring(dateStr, 1, 4), substring(dateStr, 5, 2), substring(dateStr, 7, 2))
 
+  /** P11 on the driver — the same `sidestream/yyyy/mm/dd` prefix from a
+    * `yyyymmdd` int, for the callers that address a day's store dir.
+    */
+  def dayPrefix(dateInt: Int): String =
+    f"sidestream/${dateInt / 10000}%04d/${dateInt / 100 % 100}%02d/${dateInt % 100}%02d"
+
   /** F2 — first 8 chars of a basename = `yyyymmdd`
     * (`/root/reference/filename_parser.go:31-33`).
     */

@@ -12,9 +12,11 @@ import org.apache.spark.sql.graft.bridge
 import graft.model.Schemas
 
 /** S7/S8 — the tar.gz repack sink (`/root/reference/embargo.go:104-122,
-  * 143-218`): for every input archive, write one public and one private
-  * `.tgz`, the private copy renamed `.tgz` → `-e.tgz`
-  * (`/root/reference/embargo.go:105`).
+  * 143-218`): for every input archive, write the public `.tgz` under its
+  * own name straight into the public store and the private one, renamed
+  * `.tgz` → `-e.tgz` (reference `embargo.go:105`), straight into the
+  * private store — `WriteResults` with its two buckets. This sink is the
+  * only code that names the private half.
   *
   * Spark-first shape: a `foreachPartition` writer over routed entry rows.
   * [[TgzSource]] produces each archive's entries contiguously and in order
@@ -29,8 +31,12 @@ import graft.model.Schemas
   * never buffered whole in memory (the reference's `bytes.Buffer` pair held
   * both output archives in RAM, `/root/reference/embargo.go:126-146`).
   *
-  * Output is published with a write-tmp-then-commit protocol: every task
-  * writes `outDir/_tmp/<final>.p<partition>.a<attempt>`, and when ALL its
+  * Output is published with a write-stage-then-commit protocol. Every call
+  * stages under its own hidden `_tmp-<uuid>` dir beside EACH destination
+  * (one dir when `publicDir == privateDir`), so two concurrent calls into
+  * the same day dir never see or clobber each other's staged files, and
+  * the commit into each store is a same-filesystem rename. Every task
+  * writes `<stage>/<final>.p<partition>.a<attempt>`, and when ALL its
   * writers have closed cleanly it marks each staged file complete by
   * renaming it to `....done` — the success record a bare attempt id cannot
   * provide. Commit considers ONLY marked files: a task that died mid-write
@@ -42,19 +48,27 @@ import graft.model.Schemas
   * fast instead of letting the second writer silently clobber the first.
   * Two marked attempts of the SAME partition are duplicate successes
   * (retry after a lost heartbeat, speculation) writing identical content;
-  * the latest is picked for determinism.
+  * the latest is picked for determinism. The call's staging dirs are
+  * removed whether it succeeds or fails.
   *
   * Marking and publishing are rename-based only where rename is atomic
   * (posix/HDFS); on object-store schemes the sink switches to the
   * rename-free [[CopyCommit]] protocol (marker PUT + copy-then-verify) —
-  * see [[CommitProtocol]].
+  * see [[CommitProtocol]]. Either way no reader of a store ever sees a
+  * half-written archive under its final name.
   */
 object TgzSink {
 
-  private val TmpDir = "_tmp"
+  private val StagePrefix = "_tmp-"
   private val DoneSuffix = ".done"
 
-  /** Write `(archive × route)` tgz pairs under `outDir`.
+  /** [[writeSplit]] with both halves into one dir. */
+  def writeSplit(routed: Dataset[Row], outDir: String): Unit =
+    writeSplit(routed, outDir, outDir)
+
+  /** Write each archive's public half into `publicDir` and its `-e.tgz`
+    * private half into `privateDir`, with [[CopyCommit]] if either dir is
+    * on an object store.
     *
     * `routed` must have columns `archive, ordinal, name, size, mode, modTime,
     * typeflag, content, route` with each archive's rows contiguous and
@@ -62,43 +76,46 @@ object TgzSink {
     * `TgzSource.entries → route` pipelines (narrow ops only). Interleaved
     * archives fail inside the task; an archive split across partitions
     * fails at commit (see class doc) — never silent corruption.
-    *
-    * Output names: `<archiveBasename>` for the public half,
-    * `<archiveBasename>` with `.tgz` → `-e.tgz` for the private half.
     */
-  def writeSplit(routed: Dataset[Row], outDir: String): Unit =
-    writeSplit(routed, outDir,
-      CommitProtocol.forPath(outDir,
-        bridge.sessionHadoopConf(routed.sparkSession)))
+  def writeSplit(routed: Dataset[Row], publicDir: String,
+                 privateDir: String): Unit = {
+    val conf = bridge.sessionHadoopConf(routed.sparkSession)
+    writeSplit(routed, publicDir, privateDir,
+      if (Seq(publicDir, privateDir).exists(
+          CommitProtocol.forPath(_, conf) == CopyCommit)) CopyCommit
+      else RenameCommit)
+  }
 
-  /** [[writeSplit]] with an explicit commit protocol — the no-arg overload
-    * picks [[CopyCommit]] automatically for object-store schemes.
-    */
-  def writeSplit(routed: Dataset[Row], outDir: String,
+  /** [[writeSplit]] with an explicit commit protocol. */
+  def writeSplit(routed: Dataset[Row], publicDir: String, privateDir: String,
                  protocol: CommitProtocol): Unit = {
     val spark = routed.sparkSession
     // session conf captured ONCE on the driver and shipped — a fresh
     // `new Configuration()` in the task would drop spark.hadoop.* settings
     // (object-store credentials, fs impls) and silently write elsewhere
     val sconf = new SerializableHadoopConf(bridge.sessionHadoopConf(spark))
-    val out = new Path(outDir)
-    val tmp = new Path(out, TmpDir)
-    val driverFs = out.getFileSystem(sconf.value)
-    driverFs.delete(tmp, true) // stale tmp from a failed prior run
-    driverFs.mkdirs(tmp)
+    val stage = StagePrefix + java.util.UUID.randomUUID
+    val pubStage = new Path(publicDir, stage).toString
+    val privStage = new Path(privateDir, stage).toString
+    val staged = Seq(pubStage, privStage).distinct
+    staged.foreach(d => new Path(d).getFileSystem(sconf.value).mkdirs(new Path(d)))
 
-    routed.foreachPartition { rows: Iterator[Row] =>
+    try routed.foreachPartition { rows: Iterator[Row] =>
       val conf = sconf.value
-      val fs = new Path(outDir).getFileSystem(conf)
-      val tmpDir = new Path(new Path(outDir), TmpDir)
       val tc = TaskContext.get()
       val taskSuffix = s".p${tc.partitionId()}.a${tc.taskAttemptId()}"
       val closed = scala.collection.mutable.HashSet.empty[String]
-      val stagedNames = scala.collection.mutable.ArrayBuffer.empty[String]
+      val stagedFiles = scala.collection.mutable.ArrayBuffer.empty[Path]
       var current: String = null
       var lastOrdinal = Long.MinValue
       var pub: TarWriter = null
       var priv: TarWriter = null
+
+      def open(dir: String, name: String): TarWriter = {
+        val p = new Path(dir, name + taskSuffix)
+        stagedFiles += p
+        new TarWriter(p.getFileSystem(conf).create(p, true))
+      }
 
       def closeCurrent(): Unit = if (current != null) {
         pub.close(); priv.close()
@@ -116,12 +133,9 @@ object TgzSink {
           current = archive
           lastOrdinal = Long.MinValue
           val base = archive.substring(archive.lastIndexOf('/') + 1)
+          pub = open(pubStage, base)
           // S8 rename (/root/reference/embargo.go:105)
-          val privName = base.replace(".tgz", "-e.tgz")
-          stagedNames += base + taskSuffix
-          stagedNames += privName + taskSuffix
-          pub = new TarWriter(fs.create(new Path(tmpDir, base + taskSuffix), true))
-          priv = new TarWriter(fs.create(new Path(tmpDir, privName + taskSuffix), true))
+          priv = open(privStage, base.replace(".tgz", "-e.tgz"))
         }
         require(ordinal > lastOrdinal,
           s"entries for $archive are out of order at ordinal $ordinal — caller reordered rows")
@@ -135,56 +149,55 @@ object TgzSink {
       // RenameCommit marks by renaming the data file itself (atomic on
       // posix/HDFS); CopyCommit never renames — it PUTs a one-byte
       // `.done` marker beside the data file (atomic single-object PUT).
-      stagedNames.foreach { n =>
+      stagedFiles.foreach { p =>
+        val fs = p.getFileSystem(conf)
         protocol match {
           case RenameCommit =>
-            if (!fs.rename(new Path(tmpDir, n), new Path(tmpDir, n + DoneSuffix)))
-              throw new java.io.IOException(s"failed to mark staged file $n complete")
+            if (!fs.rename(p, p.suffix(DoneSuffix)))
+              throw new java.io.IOException(s"failed to mark staged file $p complete")
           case CopyCommit =>
-            val m = fs.create(new Path(tmpDir, n + DoneSuffix), true)
+            val m = fs.create(p.suffix(DoneSuffix), true)
             // non-empty on purpose: the commit election lists the staging
-            // dir through Spark's file index, which prunes zero-length
+            // dirs through Spark's file index, which prunes zero-length
             // files — an empty marker would be invisible to it
             m.write('k'); m.close()
         }
       }
-    }
+    } catch { case e: Throwable => discard(staged, sconf); throw e }
 
-    commit(spark, outDir, sconf, protocol)
+    commit(spark, staged, sconf, protocol)
   }
 
-  /** Publish `_tmp` outputs: consider only `.done`-marked files (attempts
-    * whose task closed every writer — unmarked files are mid-write debris
-    * and are dropped with the staging dir), fail on any final name marked
-    * by two distinct partitions, keep the latest marked attempt per final
-    * name, rename winners into place (overwriting prior runs' outputs).
+  /** Publish the `staged` dirs' outputs, each into its staging dir's
+    * parent, then remove the staging dirs: consider only `.done`-marked
+    * files (unmarked ones are mid-write debris), fail on any final name
+    * marked by two distinct partitions, keep the latest marked attempt per
+    * final name, put winners in place (overwriting prior runs' outputs).
     *
-    * The staging catalog is DATA: the listing is a distributed `binaryFile`
-    * METADATA scan (content pruned, file discovery parallelized by Spark's
-    * file index — the same shape as [[FsOps.list]]) and the winner election
-    * is a `groupBy(finalName)` aggregation, so commit holds no per-archive
-    * state on the driver and survives ~10⁷ staged archives where a
-    * driver-side `listStatus` array would be the scaling wall. The renames
-    * are likewise distributed, metadata-only ops; the driver sees only the
-    * conflict verdict (a handful of example names).
+    * The staging catalog is DATA: ONE distributed `binaryFile` METADATA
+    * scan lists every staging dir (content pruned, file discovery
+    * parallelized by Spark's file index — the same shape as
+    * [[FsOps.list]]) and the winner election is a `groupBy(stage, fin)`
+    * aggregation, so commit holds no per-archive state on the driver and
+    * survives ~10⁷ staged archives where a driver-side `listStatus` array
+    * would be the scaling wall. The renames are likewise distributed,
+    * metadata-only ops; the driver sees only the conflict verdict (a
+    * handful of example names).
     */
-  private[io] def commit(spark: org.apache.spark.sql.SparkSession, outDir: String,
-                         sconf: SerializableHadoopConf,
+  private[io] def commit(spark: org.apache.spark.sql.SparkSession,
+                         staged: Seq[String], sconf: SerializableHadoopConf,
                          protocol: CommitProtocol = RenameCommit): Unit = {
     import org.apache.spark.sql.functions._
-    val out = new Path(outDir)
-    val tmp = new Path(out, TmpDir)
-    val fs = out.getFileSystem(sconf.value)
-
     val stagedRe = "^(.*)\\.p(\\d+)\\.a(\\d+)\\" + DoneSuffix + "$"
-    val perFin = spark.read.format("binaryFile").load(tmp.toString)
-      .select(regexp_extract(col("path"), "([^/]+)$", 1).as("tmpName"))
-      .select(col("tmpName"),
+    val perFin = spark.read.format("binaryFile").load(staged: _*)
+      .select(regexp_extract(col("path"), "^(.*)/[^/]+$", 1).as("stage"),
+        regexp_extract(col("path"), "([^/]+)$", 1).as("tmpName"))
+      .select(col("stage"), col("tmpName"),
         regexp_extract(col("tmpName"), stagedRe, 1).as("fin"),
         regexp_extract(col("tmpName"), stagedRe, 2).cast("long").as("part"),
         regexp_extract(col("tmpName"), stagedRe, 3).cast("long").as("attempt"))
       .filter(col("fin") =!= "") // unmarked debris doesn't parse — dropped
-      .groupBy("fin").agg(
+      .groupBy("stage", "fin").agg(
         countDistinct(col("part")).as("n_parts"),
         // latest attempt per final name wins (earlier = retry debris of the
         // same partition writing identical content)
@@ -195,26 +208,23 @@ object TgzSink {
       val conflicts = perFin.filter(col("n_parts") > 1)
         .select("fin").orderBy("fin").limit(5)
         .collect().map(_.getString(0))
-      if (conflicts.nonEmpty) {
-        fs.delete(tmp, true)
+      if (conflicts.nonEmpty)
         throw new IllegalStateException(
           "archive rows were split across partitions — outputs claimed by " +
             s"multiple tasks: ${conflicts.mkString(", ")}")
-      }
-      perFin.select("winner", "fin").foreachPartition { it: Iterator[Row] =>
+      perFin.select("stage", "winner", "fin").foreachPartition { it: Iterator[Row] =>
         val conf = sconf.value
-        val o = new Path(outDir)
-        val pfs = o.getFileSystem(conf)
-        val t = new Path(o, TmpDir)
         it.foreach { r =>
-          val target = new Path(o, r.getString(1))
+          val stage = new Path(r.getString(0))
+          val pfs = stage.getFileSystem(conf)
+          val target = new Path(stage.getParent, r.getString(2))
           protocol match {
             case RenameCommit =>
               // the `.done` file IS the data under rename marking
               pfs.delete(target, false)
-              if (!pfs.rename(new Path(t, r.getString(0)), target))
+              if (!pfs.rename(new Path(stage, r.getString(1)), target))
                 throw new java.io.IOException(
-                  s"commit rename failed for ${r.getString(1)}")
+                  s"commit rename failed for ${r.getString(2)}")
             case CopyCommit =>
               // the `.done` file is a marker; the data sits beside it.
               // Copy-then-verify: object copy/PUT is complete-or-absent,
@@ -222,21 +232,29 @@ object TgzSink {
               // "published object verifiably holds the staged bytes"
               // before the winner is declared committed. The staged
               // source is left for the staging-dir sweep.
-              val src = new Path(t, r.getString(0).stripSuffix(DoneSuffix))
+              val src = new Path(stage, r.getString(1).stripSuffix(DoneSuffix))
               val srcLen = pfs.getFileStatus(src).getLen
               org.apache.hadoop.fs.FileUtil.copy(pfs, src, pfs, target,
                 false, true, conf)
               val dstLen = pfs.getFileStatus(target).getLen
               if (dstLen != srcLen)
                 throw new java.io.IOException(
-                  s"commit verify failed for ${r.getString(1)}: " +
+                  s"commit verify failed for ${r.getString(2)}: " +
                     s"published $dstLen bytes, staged $srcLen")
           }
         }
       }
-    } finally perFin.unpersist()
-    fs.delete(tmp, true)
+    } finally {
+      perFin.unpersist()
+      discard(staged, sconf)
+    }
   }
+
+  private def discard(staged: Seq[String], sconf: SerializableHadoopConf): Unit =
+    staged.foreach { d =>
+      val p = new Path(d)
+      p.getFileSystem(sconf.value).delete(p, true)
+    }
 
   /** One gzipped tar stream; copies the 5 header fields the reference
     * preserves (`/root/reference/embargo.go:163-168`).

@@ -88,25 +88,39 @@ object EmbargoSplit {
     routed.groupBy("route")
       .agg(count(lit(1)).as("n_files"), sum(col("size")).as("n_bytes"))
 
-  /** End-to-end day/file run: split every archive under `inPath` into
-    * `-p`/`-e` pairs under `outDir` (`/root/reference/embargo.go:228-241`).
-    */
+  /** [[run]] with both halves into one dir. */
   def run(spark: SparkSession, inPath: String, whitelistPath: String,
           cutoffDateInt: Int, outDir: String): Unit =
-    runWith(spark, inPath, TgzSource.whitelist(spark, whitelistPath),
-      cutoffDateInt, outDir)
+    run(spark, inPath, whitelistPath, cutoffDateInt, outDir, outDir)
 
-  /** [[run]] with the whitelist supplied as a DataFrame (one `wip` column)
-    * instead of a text path — the form the service's refreshed whitelist
-    * store feeds ([[Service]] re-reads the store per request, the
+  /** End-to-end day/file run (reference `embargo.go:228-241`):
+    * [[runWith]] with the whitelist read from a text path.
+    */
+  def run(spark: SparkSession, inPath: String, whitelistPath: String,
+          cutoffDateInt: Int, publicDir: String, privateDir: String): Unit =
+    runWith(spark, inPath, TgzSource.whitelist(spark, whitelistPath),
+      cutoffDateInt, publicDir, privateDir)
+
+  /** [[runWith]] with both halves into one dir. */
+  def runWith(spark: SparkSession, inPath: String, whitelist: DataFrame,
+              cutoffDateInt: Int, outDir: String): Unit =
+    runWith(spark, inPath, whitelist, cutoffDateInt, outDir, outDir)
+
+  /** The split with the whitelist supplied as a DataFrame (one `wip`
+    * column) instead of a text path — the form the service's refreshed
+    * whitelist store feeds ([[Service]] re-reads the store per request, the
     * reference's in-memory reload made durable,
     * `/root/reference/embargo.go:94-101`). `inPath` may be a single
     * archive, a directory, or a glob: a whole day splits as ONE job whose
-    * task parallelism is the per-archive explode.
+    * task parallelism is the per-archive explode. Each public half is
+    * committed straight into `publicDir`, each `-e.tgz` private half into
+    * `privateDir` — the reference's `WriteResults`
+    * (reference `embargo.go:104-122`), see [[TgzSink]].
     */
   def runWith(spark: SparkSession, inPath: String, whitelist: DataFrame,
-              cutoffDateInt: Int, outDir: String): Unit = {
+              cutoffDateInt: Int, publicDir: String, privateDir: String): Unit = {
     val entries = TgzSource.entries(spark, inPath)
-    TgzSink.writeSplit(route(entries, whitelist, cutoffDateInt), outDir)
+    TgzSink.writeSplit(route(entries, whitelist, cutoffDateInt),
+      publicDir, privateDir)
   }
 }

@@ -36,7 +36,7 @@ object Unembargo {
                  dateInt: Int, cutoffDateInt: Int): (Long, Long) = {
     require(validDate(dateInt, cutoffDateInt),
       s"date $dateInt outside (20160000, 21000000] or newer than cutoff $cutoffDateInt")
-    val prefix = f"sidestream/${dateInt / 10000}%04d/${dateInt / 100 % 100}%02d/${dateInt % 100}%02d"
+    val prefix = graft.functions.NameFunctions.dayPrefix(dateInt)
     val srcDay = s"$srcDir/$prefix"
     val dstDay = s"$dstDir/$prefix"
     FsOps.mkdirs(spark, dstDay)

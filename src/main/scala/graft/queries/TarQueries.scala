@@ -210,23 +210,15 @@ object TarQueries {
     graft.io.FsOps.deletePrefix(spark, root)
     val pub = s"$root/public"
     val priv = s"$root/embargoed"
-    def dayPrefix(date: Int) =
-      f"sidestream/${date / 10000}%04d/${date / 100 % 100}%02d/${date % 100}%02d"
     val fixtures = Seq((FixtureTgz, FixtureCutoff, 20170315),
       (Fixture2Tgz, Fixture2Cutoff, 20170316))
-    // E1: split each day, then the S8 insertion into the two stores —
-    // the two day jobs are independent (disjoint split dirs and day
-    // prefixes), so they overlap (guide §2.6)
+    // E1: split each day straight into the two stores (the S8 insertion)
+    // — the two day jobs are independent (disjoint day prefixes), so they
+    // overlap (guide §2.6)
     inParallel(fixtures) { case (tgz, cutoff, date) =>
-      val out = s"$root/split_$date"
-      EmbargoSplit.run(spark, tgz, FixtureWhitelist, cutoff, out)
-      val base = tgz.substring(tgz.lastIndexOf('/') + 1)
-      val e = base.replace(".tgz", "-e.tgz")
-      val prefix = dayPrefix(date)
-      graft.io.FsOps.mkdirs(spark, s"$pub/$prefix")
-      graft.io.FsOps.mkdirs(spark, s"$priv/$prefix")
-      graft.io.FsOps.copy(spark, s"$out/$base", s"$pub/$prefix/$base")
-      graft.io.FsOps.copy(spark, s"$out/$e", s"$priv/$prefix/$e")
+      val prefix = graft.functions.NameFunctions.dayPrefix(date)
+      EmbargoSplit.run(spark, tgz, FixtureWhitelist, cutoff,
+        s"$pub/$prefix", s"$priv/$prefix")
     }
     // E2: the year has passed for fixture 1's day only — validDate is the
     // promotion decision, promoteDay the distributed copy
@@ -316,28 +308,19 @@ object TarQueries {
     // the accepted batch is request-sized (one archive per HTTP submit in
     // the reference; a bounded driver loop here, each archive's split a
     // distributed job of its own — overlapped, guide §2.6: the requests
-    // write disjoint split_<reqId> dirs and distinct day prefixes)
+    // write distinct archives, each split staging in its own dirs)
     val accepted = reqs
       .filter(col("url").isNotNull && col("url").startsWith("gs://") &&
         isSidestreamArchive(col("url")))
       .select("req_id", "url").collect()
       .map(r => (r.getLong(0), r.getString(1)))
-    inParallel(accepted.toSeq) { case (reqId, url) =>
+    inParallel(accepted.toSeq) { case (_, url) =>
       // deploy.go:40-42: strip "gs://", drop the bucket at the first '/'
       val removePrefix = url.stripPrefix("gs://")
       val objPath = removePrefix.substring(removePrefix.indexOf('/') + 1)
       val dayDir = objPath.substring(0, objPath.lastIndexOf('/'))
-      val archBase = base(objPath)
-      val splitOut = s"$root/split_$reqId"
       EmbargoSplit.run(spark, s"$src/$objPath", FixtureWhitelist, E4Cutoff,
-        splitOut)
-      graft.io.FsOps.mkdirs(spark, s"$pub/$dayDir")
-      graft.io.FsOps.mkdirs(spark, s"$priv/$dayDir")
-      graft.io.FsOps.copy(spark, s"$splitOut/$archBase",
-        s"$pub/$dayDir/$archBase")
-      graft.io.FsOps.copy(spark,
-        s"$splitOut/${archBase.replace(".tgz", "-e.tgz")}",
-        s"$priv/$dayDir/${archBase.replace(".tgz", "-e.tgz")}")
+        s"$pub/$dayDir", s"$priv/$dayDir")
     }
 
     // read back what each store actually serves, keyed to the request by

@@ -176,6 +176,20 @@ class KMeansSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("pinned fits read seed vectors by column name: a (q, id) table fits like (id, q)") {
+    val rnd = new scala.util.Random(31)
+    val vecs = Seq.fill(30)(Array.fill(4)(rnd.nextDouble() * 1.6 - 0.8))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val idFirst = ptsOf(vecs).select("id", "q").localCheckpoint()
+    val qFirst = ptsOf(vecs).select("q", "id").localCheckpoint()
+    val want = rows(KMeans.fitPinned(idFirst, k = 3, iters = 2))
+    assert(want === run(vecs, k = 3, iters = 2).map { case (i, (c, d)) => (i, c, d) }.toSet)
+    assert(rows(KMeans.fitPinned(qFirst, k = 3, iters = 2)) === want)
+    assert(rows(KMeans.fitPlusPlusPinned(qFirst, k = 3, iters = 2)) ===
+      rows(KMeans.fitPlusPlusPinned(idFirst, k = 3, iters = 2)))
+  }
+
   test("loud guards: domain, k bounds, iters, not enough points") {
     import spark.implicits._
     val bad = Seq((0L, Array(1.5, 0.0)), (1L, Array(0.0, 0.0)))

@@ -53,19 +53,47 @@ class ServiceSpec extends AnyFunSuite with SparkSuite {
       today = () => java.time.LocalDate.of(2018, 3, 15)))
   }
 
+  private def request(port: Int, path: String) =
+    java.net.http.HttpRequest.newBuilder()
+      .uri(java.net.URI.create(s"http://127.0.0.1:$port$path")).GET().build()
+
   private def get(path: String): (Int, String) = {
     val client = java.net.http.HttpClient.newHttpClient()
-    val req = java.net.http.HttpRequest.newBuilder()
-      .uri(java.net.URI.create(s"http://127.0.0.1:${service.port}$path"))
-      .GET().build()
-    val resp =
-      client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
+    val resp = client.send(request(service.port, path),
+      java.net.http.HttpResponse.BodyHandlers.ofString())
     (resp.statusCode(), resp.body())
   }
 
   private def entryNames(tgz: String): Set[String] =
     TgzSource.entries(spark, tgz).filter(col("typeflag") === "0")
       .select("name").collect().map(_.getString(0)).toSet
+
+  /** Every name in `dir` except the local filesystem's `.crc` sidecars —
+    * staging dirs included, so a leaked one shows up.
+    */
+  private def listing(dir: String): Set[String] =
+    Files.list(java.nio.file.Paths.get(dir)).toArray
+      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+      .filterNot(_.startsWith(".")).toSet
+
+  /** A service over fresh stores under `root`, its scraper store holding
+    * each `(archive, day prefix, stored name)`; same clock and seed
+    * whitelist as the shared service.
+    */
+  private def freshService(root: String,
+                           archives: Seq[(String, String, String)]): Service.EmbargoService = {
+    archives.foreach { case (tgz, prefix, name) =>
+      graft.io.FsOps.mkdirs(spark, s"$root/src/$prefix")
+      graft.io.FsOps.copy(spark, tgz, s"$root/src/$prefix/$name")
+    }
+    Service.serve(spark, Service.ServiceConfig(
+      srcDir = s"$root/src", publicDir = s"$root/public",
+      privateDir = s"$root/embargoed",
+      whitelistPath = TarQueries.FixtureWhitelist,
+      sitesUrl = "file:///nonexistent.json",
+      whitelistOut = s"$root/whitelist.parquet",
+      today = () => java.time.LocalDate.of(2018, 3, 15)))
+  }
 
   test("/_ah/health answers 200 ok") {
     assert(get("/_ah/health") === ((200, "ok")))
@@ -138,6 +166,8 @@ class ServiceSpec extends AnyFunSuite with SparkSuite {
     assert(entryNames(s"$pubDir/sidestream/2017/03/16/$fix2").nonEmpty)
     assert(entryNames(
       s"$privDir/sidestream/2017/03/16/${fix2.replace(".tgz", "-e.tgz")}").nonEmpty)
+    // the public store holds public halves only
+    assert(!listing(s"$pubDir/sidestream/2017/03/16").exists(_.endsWith("-e.tgz")))
     assert(get("/submit?date=20250101")._1 === 200) // no data staged there
     assert(get("/submit?date=2017031")._1 === 500)  // malformed date
   }
@@ -307,6 +337,61 @@ class ServiceSpec extends AnyFunSuite with SparkSuite {
       spark.sparkContext.removeSparkListener(listener)
       svc.close()
     }
+  }
+
+  test("concurrent /submit?file= requests for one day each commit both halves into the right store") {
+    val root4 = Files.createTempDirectory("graft-svc-conc").toString
+    val day = "sidestream/2017/03/19"
+    val tgzs = Seq(TarQueries.FixtureTgz, TarQueries.Fixture2Tgz)
+    val svc = freshService(root4, tgzs.map(t => (t, day, base(t))))
+    try {
+      // both requests in flight at once, on two handler threads
+      val client = java.net.http.HttpClient.newHttpClient()
+      val pending = tgzs.map { t =>
+        client.sendAsync(
+          request(svc.port, s"/submit?file=${b64(s"gs://scraper-mlab/$day/${base(t)}")}"),
+          java.net.http.HttpResponse.BodyHandlers.ofString())
+      }
+      assert(pending.map(_.get().statusCode()) === Seq(200, 200))
+      // byte for byte what a direct split of each archive writes
+      val direct = s"$root4/direct"
+      tgzs.foreach(t => EmbargoSplit.run(spark, t, TarQueries.FixtureWhitelist,
+        20170315, direct))
+      def bytes(p: String) = Files.readAllBytes(java.nio.file.Paths.get(p)).toSeq
+      val privNames = tgzs.map(t => base(t).replace(".tgz", "-e.tgz"))
+      for (b <- tgzs.map(base))
+        assert(bytes(s"$root4/public/$day/$b") === bytes(s"$direct/$b"), b)
+      for (e <- privNames)
+        assert(bytes(s"$root4/embargoed/$day/$e") === bytes(s"$direct/$e"), e)
+      // each store holds exactly its halves: nothing misrouted, no
+      // staging dir left behind
+      assert(listing(s"$root4/public/$day") === tgzs.map(base).toSet)
+      assert(listing(s"$root4/embargoed/$day") === privNames.toSet)
+    } finally svc.close()
+  }
+
+  test("/submit?date= routes by half, not by name: a source archive named -e.tgz keeps its name in the public store (ADVICE r20)") {
+    val root5 = Files.createTempDirectory("graft-svc-e-name").toString
+    val day = "sidestream/2017/03/20"
+    val fix2 = base(TarQueries.Fixture2Tgz)
+    val odd = fix2.replace(".tgz", "-e.tgz")
+    val svc = freshService(root5, Seq((TarQueries.Fixture2Tgz, day, odd)))
+    try {
+      val client = java.net.http.HttpClient.newHttpClient()
+      assert(client.send(request(svc.port, "/submit?date=20170320"),
+        java.net.http.HttpResponse.BodyHandlers.ofString()).statusCode() === 200)
+      val oddPriv = odd.replace(".tgz", "-e.tgz") // ...-e-e.tgz
+      assert(listing(s"$root5/public/$day") === Set(odd))
+      assert(listing(s"$root5/embargoed/$day") === Set(oddPriv))
+      val direct = s"$root5/direct"
+      EmbargoSplit.run(spark, TarQueries.Fixture2Tgz, TarQueries.FixtureWhitelist,
+        20170315, direct)
+      assert(entryNames(s"$root5/public/$day/$odd") === entryNames(s"$direct/$fix2"))
+      assert(entryNames(s"$root5/embargoed/$day/$oddPriv") ===
+        entryNames(s"$direct/${fix2.replace(".tgz", "-e.tgz")}"))
+      assert(entryNames(s"$root5/public/$day/$odd").nonEmpty &&
+        entryNames(s"$root5/embargoed/$day/$oddPriv").nonEmpty)
+    } finally svc.close()
   }
 
   test("service shuts down cleanly") {

@@ -39,7 +39,7 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
     // a second final name whose only attempt is unmarked: nothing published
     Files.write(Paths.get(s"$outDir/_tmp/y.tgz.p1.a1"), "DEAD".getBytes)
 
-    TgzSink.commit(spark, outDir, sconf())
+    TgzSink.commit(spark, Seq(s"$outDir/_tmp"), sconf())
 
     assert(Files.readString(Paths.get(s"$outDir/x.tgz")) === "COMPLETE")
     assert(!Files.exists(Paths.get(s"$outDir/y.tgz")))
@@ -52,7 +52,7 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
     Files.write(Paths.get(s"$outDir/_tmp/z.tgz.p2.a4.done"), "EARLY".getBytes)
     Files.write(Paths.get(s"$outDir/_tmp/z.tgz.p2.a7.done"), "LATE".getBytes)
 
-    TgzSink.commit(spark, outDir, sconf())
+    TgzSink.commit(spark, Seq(s"$outDir/_tmp"), sconf())
 
     assert(Files.readString(Paths.get(s"$outDir/z.tgz")) === "LATE")
   }
@@ -66,7 +66,7 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
     // unmarked mid-write debris must still lose
     Files.write(Paths.get(s"$outDir/_tmp/x.tgz.p0.a9"), "TRUNCATED-LONGER".getBytes)
 
-    TgzSink.commit(spark, outDir, sconf(), CopyCommit)
+    TgzSink.commit(spark, Seq(s"$outDir/_tmp"), sconf(), CopyCommit)
 
     assert(Files.readString(Paths.get(s"$outDir/x.tgz")) === "COMPLETE")
     assert(!Files.exists(Paths.get(s"$outDir/_tmp")))
@@ -82,33 +82,60 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
     spark.sparkContext.hadoopConfiguration
       .set("fs.nar.impl", classOf[NoRenameFileSystem].getName)
     val local = Files.createTempDirectory("graft-nar").toString
-    val outDir = s"nar://$local"
+    // the two halves go to two distinct stores on the rename-free scheme
+    val (pubDir, privDir) = (s"nar://$local/public", s"nar://$local/embargoed")
 
     val entries = TgzSource.entries(spark, FixtureTgz)
     val wl = TgzSource.whitelist(spark, FixtureWhitelist)
     val routed = graft.ops.EmbargoSplit.route(entries, wl, FixtureCutoff)
-    TgzSink.writeSplit(routed, outDir, CopyCommit)
+    TgzSink.writeSplit(routed, pubDir, privDir, CopyCommit)
 
     val base = FixtureTgz.substring(FixtureTgz.lastIndexOf('/') + 1)
+    val privBase = base.replace(".tgz", "-e.tgz")
     val pub = TgzSource.readTgzStream(base,
-      Files.newInputStream(Paths.get(s"$local/$base"))).toSeq
+      Files.newInputStream(Paths.get(s"$local/public/$base"))).toSeq
     val priv = TgzSource.readTgzStream(base,
-      Files.newInputStream(
-        Paths.get(s"$local/${base.replace(".tgz", "-e.tgz")}"))).toSeq
+      Files.newInputStream(Paths.get(s"$local/embargoed/$privBase"))).toSeq
     assert(pub.length === 145 && priv.length === 59)
-    assert(!Files.exists(Paths.get(s"$local/_tmp")))
+    // each store holds exactly its own half, and no staging dir is left
+    def listing(d: String) =
+      Files.list(Paths.get(s"$local/$d")).toArray.map(_.toString.split('/').last).toSet
+    assert(listing("public") === Set(base))
+    assert(listing("embargoed") === Set(privBase))
 
     // non-vacuity: the rename-marking protocol on the same store fails —
     // the wrapper really has no rename, so a green CopyCommit run proves
     // the path is rename-free end to end
     val out2 = s"nar://${Files.createTempDirectory("graft-nar2")}"
     val e = intercept[Exception] {
-      TgzSink.writeSplit(routed, out2, RenameCommit)
+      TgzSink.writeSplit(routed, out2, out2, RenameCommit)
     }
     def chain(t: Throwable): Seq[Throwable] =
       if (t == null) Nil else t +: chain(t.getCause)
     assert(chain(e).exists(_.getMessage != null)
       && chain(e).exists(c => Option(c.getMessage).exists(_.contains("rename"))))
+  }
+
+  test("writeSplit leaves another call's staged files under the same destination alone") {
+    import graft.queries.TarQueries.{FixtureCutoff, FixtureTgz, FixtureWhitelist}
+    val outDir = Files.createTempDirectory("graft-commit-concurrent").toString
+    // a concurrent call's marked attempts, staged beside the same
+    // destination — under the shared `_tmp` name and under a per-call one
+    val planted = Seq("_tmp", "_tmp-other").map { d =>
+      Files.createDirectories(Paths.get(s"$outDir/$d"))
+      Files.write(Paths.get(s"$outDir/$d/other.tgz.p0.a1.done"), "THEIRS".getBytes)
+    }
+
+    val entries = TgzSource.entries(spark, FixtureTgz)
+    val wl = TgzSource.whitelist(spark, FixtureWhitelist)
+    TgzSink.writeSplit(
+      graft.ops.EmbargoSplit.route(entries, wl, FixtureCutoff), outDir)
+
+    val base = FixtureTgz.substring(FixtureTgz.lastIndexOf('/') + 1)
+    assert(Files.exists(Paths.get(s"$outDir/$base")))
+    planted.foreach(p => assert(Files.readString(p) === "THEIRS", s"$p clobbered"))
+    // nor did this call publish the other call's file
+    assert(!Files.exists(Paths.get(s"$outDir/other.tgz")))
   }
 
   test("commit protocol auto-detect: object-store schemes get CopyCommit") {
@@ -126,7 +153,7 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
     Files.write(Paths.get(s"$outDir/_tmp/w.tgz.p1.a2.done"), "P1".getBytes)
 
     val e = intercept[IllegalStateException] {
-      TgzSink.commit(spark, outDir, sconf())
+      TgzSink.commit(spark, Seq(s"$outDir/_tmp"), sconf())
     }
     assert(e.getMessage.contains("split across partitions"))
     assert(!Files.exists(Paths.get(s"$outDir/w.tgz")))

@@ -172,7 +172,7 @@ class TgzSplitSpec extends AnyFunSuite with SparkSuite {
     }
     assert(e.getMessage.contains("split across partitions"))
     // nothing was published and the staging dir was cleaned up
-    assert(!Files.exists(Paths.get(s"$outDir/_tmp")))
+    assert(Files.list(Paths.get(outDir)).toArray.isEmpty)
     val base = FixtureTgz.substring(FixtureTgz.lastIndexOf('/') + 1)
     assert(!Files.exists(Paths.get(s"$outDir/$base")))
   }
