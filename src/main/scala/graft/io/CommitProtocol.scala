@@ -3,23 +3,22 @@ package graft.io
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** How [[TgzSink]] marks completed task attempts and publishes winners.
+/** How [[TgzSink]] publishes the staged halves its write job reported.
+  * The write job's own task results name the complete files (see
+  * [[TgzSink]]), so the two protocols differ only in how a staged half is
+  * put under its final name.
   *
   * [[RenameCommit]] — posix/HDFS: `FileSystem.rename` is atomic there, so
-  * completion-marking renames the staged file to `....done` and publish
-  * renames the winner into place.
+  * publish renames the staged file into place.
   *
   * [[CopyCommit]] — object stores (GCS/S3/ABFS — the reference's actual
   * production target promotes via GCS server-side copy,
   * `/root/reference/unembargo.go:124-130`): Hadoop `rename` there is a
   * non-atomic copy+delete whose failure state is unknowable, so this
-  * protocol never renames. Completion-marking PUTs a one-byte
-  * `<staged>.done` marker object (a single-object PUT is atomic on every
-  * major store, and the marker is only written after every tar stream
-  * closed — so a marker implies complete staged bytes); publish copies the
-  * staged object to its final name (object copy is complete-or-absent),
-  * verifies the published length against the staged length before
-  * declaring success, and leaves the source for the staging-dir sweep.
+  * protocol never renames. Publish copies the staged object to its final
+  * name (object copy is complete-or-absent), verifies the published length
+  * against the staged length before declaring success, and leaves the
+  * source for the staging-dir sweep.
   */
 sealed trait CommitProtocol extends Serializable
 case object RenameCommit extends CommitProtocol

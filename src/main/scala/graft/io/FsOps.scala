@@ -139,6 +139,21 @@ object FsOps {
     *
     * Returns the output file count.
     */
+  def compactParquet(spark: SparkSession, dir: String,
+                     targetBytes: Long = 128L << 20,
+                     shuffle: Boolean = true): Int = {
+    val f = fs(spark, dir)
+    val size = parquetBytes(spark, dir)
+    val nFiles = math.max(1, math.ceil(size.toDouble / targetBytes).toInt)
+    val df = spark.read.parquet(dir)
+    val compacted = if (shuffle) df.repartition(nFiles) else df.coalesce(nFiles)
+    val tmp = dir.stripSuffix("/") + ".compact-tmp"
+    compacted.write.mode("overwrite").parquet(tmp)
+    f.delete(new Path(dir), true)
+    f.rename(new Path(tmp), new Path(dir))
+    nFiles
+  }
+
   /** Total bytes of the parquet data files under `dir` — the shared size
     * listing behind both compaction variants ([[compactParquet]] and
     * [[graft.ops.Compaction.compact]]), so their `ceil(bytes/target)`
@@ -175,20 +190,5 @@ object FsOps {
       }.sum
       walk(new Path(dir))
     }
-  }
-
-  def compactParquet(spark: SparkSession, dir: String,
-                     targetBytes: Long = 128L << 20,
-                     shuffle: Boolean = true): Int = {
-    val f = fs(spark, dir)
-    val size = parquetBytes(spark, dir)
-    val nFiles = math.max(1, math.ceil(size.toDouble / targetBytes).toInt)
-    val df = spark.read.parquet(dir)
-    val compacted = if (shuffle) df.repartition(nFiles) else df.coalesce(nFiles)
-    val tmp = dir.stripSuffix("/") + ".compact-tmp"
-    compacted.write.mode("overwrite").parquet(tmp)
-    f.delete(new Path(dir), true)
-    f.rename(new Path(tmp), new Path(dir))
-    nFiles
   }
 }

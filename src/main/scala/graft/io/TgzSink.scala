@@ -6,7 +6,7 @@ import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOut
 import org.apache.commons.compress.compressors.gzip.GzipCompressorOutputStream
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Dataset, Row}
+import org.apache.spark.sql.{Dataset, Encoders, Row}
 import org.apache.spark.sql.graft.bridge
 
 import graft.model.Schemas
@@ -18,7 +18,7 @@ import graft.model.Schemas
   * private store — `WriteResults` with its two buckets. This sink is the
   * only code that names the private half.
   *
-  * Spark-first shape: a `foreachPartition` writer over routed entry rows.
+  * Spark-first shape: a `mapPartitions` writer over routed entry rows.
   * [[TgzSource]] produces each archive's entries contiguously and in order
   * inside one task, so the whole split pipeline
   * (scan → explode → route → repack) runs shuffle-free: this sink just
@@ -36,31 +36,28 @@ import graft.model.Schemas
   * (one dir when `publicDir == privateDir`), so two concurrent calls into
   * the same day dir never see or clobber each other's staged files, and
   * the commit into each store is a same-filesystem rename. Every task
-  * writes `<stage>/<final>.p<partition>.a<attempt>`, and when ALL its
-  * writers have closed cleanly it marks each staged file complete by
-  * renaming it to `....done` — the success record a bare attempt id cannot
-  * provide. Commit considers ONLY marked files: a task that died mid-write
-  * (or a speculative attempt killed after a slower-but-complete sibling
-  * finished) leaves unmarked debris that can never beat a complete file,
-  * regardless of attempt-id order. A final name marked by two DIFFERENT
-  * partitions means the caller broke the per-archive contiguity contract
-  * (e.g. a repartition split an archive across tasks) — the commit fails
-  * fast instead of letting the second writer silently clobber the first.
-  * Two marked attempts of the SAME partition are duplicate successes
-  * (retry after a lost heartbeat, speculation) writing identical content;
-  * the latest is picked for determinism. The call's staging dirs are
-  * removed whether it succeeds or fails.
+  * writes `<stage>/<final>.a<taskAttemptId>` — unique per attempt, so a
+  * retry or speculative attempt never writes another attempt's file — and,
+  * once all its writers have closed cleanly, returns one [[StagedHalf]]
+  * per staged file as its task result. Spark delivers exactly one
+  * successful attempt's result per partition to the driver, so the
+  * collected list names exactly the complete files to publish: the debris
+  * of an attempt that died mid-write (or a speculative attempt killed after
+  * its sibling won) is never reported and never published. A final name
+  * reported by two partitions means the caller broke the per-archive
+  * contiguity contract (e.g. a repartition split an archive across tasks)
+  * — the commit fails fast instead of letting the second writer silently
+  * clobber the first. The call's staging dirs are removed whether it
+  * succeeds or fails.
   *
-  * Marking and publishing are rename-based only where rename is atomic
-  * (posix/HDFS); on object-store schemes the sink switches to the
-  * rename-free [[CopyCommit]] protocol (marker PUT + copy-then-verify) —
-  * see [[CommitProtocol]]. Either way no reader of a store ever sees a
-  * half-written archive under its final name.
+  * Publishing renames where rename is atomic (posix/HDFS); on object-store
+  * schemes the sink switches to the rename-free [[CopyCommit]]
+  * (copy-then-verify) — see [[CommitProtocol]]. Either way no reader of a
+  * store ever sees a half-written archive under its final name.
   */
 object TgzSink {
 
   private val StagePrefix = "_tmp-"
-  private val DoneSuffix = ".done"
 
   /** [[writeSplit]] with both halves into one dir. */
   def writeSplit(routed: Dataset[Row], outDir: String): Unit =
@@ -100,20 +97,20 @@ object TgzSink {
     val staged = Seq(pubStage, privStage).distinct
     staged.foreach(d => new Path(d).getFileSystem(sconf.value).mkdirs(new Path(d)))
 
-    try routed.foreachPartition { rows: Iterator[Row] =>
+    val written = routed.mapPartitions { rows: Iterator[Row] =>
       val conf = sconf.value
       val tc = TaskContext.get()
-      val taskSuffix = s".p${tc.partitionId()}.a${tc.taskAttemptId()}"
       val closed = scala.collection.mutable.HashSet.empty[String]
-      val stagedFiles = scala.collection.mutable.ArrayBuffer.empty[Path]
+      val halves = scala.collection.mutable.ArrayBuffer.empty[StagedHalf]
       var current: String = null
       var lastOrdinal = Long.MinValue
       var pub: TarWriter = null
       var priv: TarWriter = null
 
       def open(dir: String, name: String): TarWriter = {
-        val p = new Path(dir, name + taskSuffix)
-        stagedFiles += p
+        val tmpName = s"$name.a${tc.taskAttemptId()}"
+        halves += StagedHalf(dir, name, tc.partitionId(), tmpName)
+        val p = new Path(dir, tmpName)
         new TarWriter(p.getFileSystem(conf).create(p, true))
       }
 
@@ -144,114 +141,66 @@ object TgzSink {
         w.write(r)
       }
       closeCurrent()
-      // every writer closed cleanly — mark this attempt's files complete so
-      // commit can tell them from the debris of attempts that died mid-write.
-      // RenameCommit marks by renaming the data file itself (atomic on
-      // posix/HDFS); CopyCommit never renames — it PUTs a one-byte
-      // `.done` marker beside the data file (atomic single-object PUT).
-      stagedFiles.foreach { p =>
-        val fs = p.getFileSystem(conf)
-        protocol match {
-          case RenameCommit =>
-            if (!fs.rename(p, p.suffix(DoneSuffix)))
-              throw new java.io.IOException(s"failed to mark staged file $p complete")
-          case CopyCommit =>
-            val m = fs.create(p.suffix(DoneSuffix), true)
-            // non-empty on purpose: the commit election lists the staging
-            // dirs through Spark's file index, which prunes zero-length
-            // files — an empty marker would be invisible to it
-            m.write('k'); m.close()
-        }
-      }
-    } catch { case e: Throwable => discard(staged, sconf); throw e }
-
-    commit(spark, staged, sconf, protocol)
+      // every writer closed cleanly: only now is this attempt's output
+      // reported, so a result implies complete staged files
+      halves.iterator
+    }(Encoders.product[StagedHalf])
+    // two short records per archive; spark.driver.maxResultSize bounds the
+    // collect, failing the job rather than the driver
+    commit(spark, staged, written.collect().toSeq, sconf, protocol)
   }
 
-  /** Publish the `staged` dirs' outputs, each into its staging dir's
-    * parent, then remove the staging dirs: consider only `.done`-marked
-    * files (unmarked ones are mid-write debris), fail on any final name
-    * marked by two distinct partitions, keep the latest marked attempt per
-    * final name, put winners in place (overwriting prior runs' outputs).
-    *
-    * The staging catalog is DATA: ONE distributed `binaryFile` METADATA
-    * scan lists every staging dir (content pruned, file discovery
-    * parallelized by Spark's file index — the same shape as
-    * [[FsOps.list]]) and the winner election is a `groupBy(stage, fin)`
-    * aggregation, so commit holds no per-archive state on the driver and
-    * survives ~10⁷ staged archives where a driver-side `listStatus` array
-    * would be the scaling wall. The renames are likewise distributed,
-    * metadata-only ops; the driver sees only the conflict verdict (a
-    * handful of example names).
+  /** Publish the reported `halves`, each into its staging dir's parent, in
+    * ONE distributed job of metadata ops (overwriting prior runs' outputs),
+    * after failing on any final name reported by two partitions. Files in
+    * the staging dirs that no half names are never published. `halves` is
+    * evaluated inside the `try`, so the `staged` dirs are removed whether
+    * the write, the check or the publish fails.
     */
   private[io] def commit(spark: org.apache.spark.sql.SparkSession,
-                         staged: Seq[String], sconf: SerializableHadoopConf,
-                         protocol: CommitProtocol = RenameCommit): Unit = {
-    import org.apache.spark.sql.functions._
-    val stagedRe = "^(.*)\\.p(\\d+)\\.a(\\d+)\\" + DoneSuffix + "$"
-    val perFin = spark.read.format("binaryFile").load(staged: _*)
-      .select(regexp_extract(col("path"), "^(.*)/[^/]+$", 1).as("stage"),
-        regexp_extract(col("path"), "([^/]+)$", 1).as("tmpName"))
-      .select(col("stage"), col("tmpName"),
-        regexp_extract(col("tmpName"), stagedRe, 1).as("fin"),
-        regexp_extract(col("tmpName"), stagedRe, 2).cast("long").as("part"),
-        regexp_extract(col("tmpName"), stagedRe, 3).cast("long").as("attempt"))
-      .filter(col("fin") =!= "") // unmarked debris doesn't parse — dropped
-      .groupBy("stage", "fin").agg(
-        countDistinct(col("part")).as("n_parts"),
-        // latest attempt per final name wins (earlier = retry debris of the
-        // same partition writing identical content)
-        max_by(col("tmpName"), col("attempt")).as("winner"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
+                         staged: Seq[String], halves: => Seq[StagedHalf],
+                         sconf: SerializableHadoopConf,
+                         protocol: CommitProtocol = RenameCommit): Unit =
     try {
-      val conflicts = perFin.filter(col("n_parts") > 1)
-        .select("fin").orderBy("fin").limit(5)
-        .collect().map(_.getString(0))
+      val reported = halves
+      val conflicts = reported.groupMap(h => (h.stage, h.fin))(_.part).collect {
+        case ((_, fin), parts) if parts.size > 1 =>
+          s"$fin (partitions ${parts.sorted.mkString(", ")})"
+      }.toSeq.sorted
       if (conflicts.nonEmpty)
         throw new IllegalStateException(
           "archive rows were split across partitions — outputs claimed by " +
-            s"multiple tasks: ${conflicts.mkString(", ")}")
-      perFin.select("stage", "winner", "fin").foreachPartition { it: Iterator[Row] =>
-        val conf = sconf.value
-        it.foreach { r =>
-          val stage = new Path(r.getString(0))
+            s"multiple tasks: ${conflicts.take(5).mkString(", ")}")
+      val sc = spark.sparkContext
+      sc.parallelize(reported, math.max(1, math.min(reported.size, sc.defaultParallelism)))
+        .foreach { h =>
+          val conf = sconf.value
+          val stage = new Path(h.stage)
           val pfs = stage.getFileSystem(conf)
-          val target = new Path(stage.getParent, r.getString(2))
+          val src = new Path(stage, h.tmpName)
+          val target = new Path(stage.getParent, h.fin)
           protocol match {
             case RenameCommit =>
-              // the `.done` file IS the data under rename marking
               pfs.delete(target, false)
-              if (!pfs.rename(new Path(stage, r.getString(1)), target))
-                throw new java.io.IOException(
-                  s"commit rename failed for ${r.getString(2)}")
+              if (!pfs.rename(src, target))
+                throw new java.io.IOException(s"commit rename failed for ${h.fin}")
             case CopyCommit =>
-              // the `.done` file is a marker; the data sits beside it.
               // Copy-then-verify: object copy/PUT is complete-or-absent,
               // and the length check turns "copy claimed success" into
               // "published object verifiably holds the staged bytes"
-              // before the winner is declared committed. The staged
-              // source is left for the staging-dir sweep.
-              val src = new Path(stage, r.getString(1).stripSuffix(DoneSuffix))
+              // before the half is declared committed. The staged source
+              // is left for the staging-dir sweep.
               val srcLen = pfs.getFileStatus(src).getLen
               org.apache.hadoop.fs.FileUtil.copy(pfs, src, pfs, target,
                 false, true, conf)
               val dstLen = pfs.getFileStatus(target).getLen
               if (dstLen != srcLen)
                 throw new java.io.IOException(
-                  s"commit verify failed for ${r.getString(2)}: " +
+                  s"commit verify failed for ${h.fin}: " +
                     s"published $dstLen bytes, staged $srcLen")
           }
         }
-      }
-    } finally {
-      perFin.unpersist()
-      discard(staged, sconf)
-    }
-  }
-
-  private def discard(staged: Seq[String], sconf: SerializableHadoopConf): Unit =
-    staged.foreach { d =>
+    } finally staged.foreach { d =>
       val p = new Path(d)
       p.getFileSystem(sconf.value).delete(p, true)
     }
@@ -276,3 +225,9 @@ object TgzSink {
     def close(): Unit = tar.close()
   }
 }
+
+/** One half a task staged: `stage/tmpName`, written by `part`, to be
+  * published as `fin` beside `stage`.
+  */
+private[io] final case class StagedHalf(stage: String, fin: String, part: Int,
+                                        tmpName: String)

@@ -193,6 +193,11 @@ object Service {
       // invalid filename — GetFilename only vets the gs:// shape
       require(objPath.contains("tgz") && objPath.contains("sidestream"),
         "not a proper sidestream file")
+      // Hadoop `Path` resolves `.`/`..` segments: without this guard
+      // `sidestream/../../x/sidestream.tgz` would read and write (both
+      // halves, the private one included) outside the stores
+      require(objPath.split("/", -1).forall(s => s.nonEmpty && s != "." && s != ".."),
+        s"object path has an empty, . or .. segment: $objPath")
       val dayDir = objPath.substring(0, objPath.lastIndexOf('/'))
       EmbargoSplit.runWith(spark, s"${cfg.srcDir}/$objPath",
         currentWhitelist(), oneYearAgoInt(cfg.today()),

@@ -394,6 +394,39 @@ class ServiceSpec extends AnyFunSuite with SparkSuite {
     } finally svc.close()
   }
 
+  test("/submit?file= with a ., .. or empty path segment is the 500 processing-failure arm and writes nothing") {
+    val root6 = Files.createTempDirectory("graft-svc-traversal").toString
+    val fixBase = base(TarQueries.FixtureTgz)
+    // a real archive OUTSIDE the stores, reachable from the scraper store
+    // by `..`: src/sidestream/../../outside = outside, and likewise each
+    // store's day dir public/sidestream/../../outside = outside
+    val outside = s"$root6/outside"
+    graft.io.FsOps.mkdirs(spark, outside)
+    graft.io.FsOps.copy(spark, TarQueries.FixtureTgz, s"$outside/$fixBase")
+    val svc = freshService(root6, Nil)
+    try {
+      val client = java.net.http.HttpClient.newHttpClient()
+      for (obj <- Seq(s"sidestream/../../outside/$fixBase",
+          s"sidestream/./../../outside/$fixBase",
+          s"sidestream//2017/03/15/$fixBase")) {
+        val file = java.net.URLEncoder.encode(b64(s"gs://scraper-mlab/$obj"), "UTF-8")
+        val resp = client.send(request(svc.port, s"/submit?file=$file"),
+          java.net.http.HttpResponse.BodyHandlers.ofString())
+        assert((resp.statusCode(), resp.body()) ===
+          ((500, "Fail with embargo single file.")), obj)
+      }
+      // nothing written outside the stores, nor inside them: the planted
+      // source is the only file under the root, and it is untouched
+      val files = Files.walk(java.nio.file.Paths.get(root6)).toArray
+        .map(_.asInstanceOf[java.nio.file.Path])
+        .filter(p => Files.isRegularFile(p) && !p.getFileName.toString.startsWith("."))
+        .map(_.toString).toSet
+      assert(files === Set(s"$outside/$fixBase"))
+      assert(Files.readAllBytes(java.nio.file.Paths.get(s"$outside/$fixBase")).toSeq ===
+        Files.readAllBytes(java.nio.file.Paths.get(TarQueries.FixtureTgz)).toSeq)
+    } finally svc.close()
+  }
+
   test("service shuts down cleanly") {
     service.close()
     intercept[Exception](get("/_ah/health"))

@@ -6,10 +6,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSuite
 
-/** Commit-protocol spec for [[TgzSink]]: only `.done`-marked staged files
-  * are publishable — an attempt that died mid-write (no marker) must never
-  * beat a complete attempt, whatever its attempt id.
-  */
 /** A local FileSystem masquerading as an object store whose `rename` is
   * unusable — models GCS/S3 semantics where rename is client-driven
   * copy+delete and must never be on the commit path.
@@ -23,53 +19,48 @@ class NoRenameFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
       s"rename is not atomic on this store: $src -> $dst")
 }
 
+/** Commit-protocol spec for [[TgzSink]]: only the staged halves the write
+  * job's tasks report are publishable — a file nobody reported (the debris
+  * of an attempt that died mid-write) is never published, whatever its size.
+  */
 class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
 
   private def sconf() =
     new SerializableHadoopConf(
       org.apache.spark.sql.graft.bridge.sessionHadoopConf(spark))
 
-  test("commit publishes marked attempts and drops unmarked mid-write debris") {
+  test("commit publishes reported halves and drops unreported mid-write debris") {
     val outDir = Files.createTempDirectory("graft-commit").toString
-    Files.createDirectories(Paths.get(s"$outDir/_tmp"))
-    // complete attempt 3 (marked) vs a KILLED attempt 9 that wrote more
-    // bytes but never closed — the higher attempt id must not win
-    Files.write(Paths.get(s"$outDir/_tmp/x.tgz.p0.a3.done"), "COMPLETE".getBytes)
-    Files.write(Paths.get(s"$outDir/_tmp/x.tgz.p0.a9"), "TRUNCATED-BUT-LONGER".getBytes)
-    // a second final name whose only attempt is unmarked: nothing published
-    Files.write(Paths.get(s"$outDir/_tmp/y.tgz.p1.a1"), "DEAD".getBytes)
+    val stage = s"$outDir/_tmp"
+    Files.createDirectories(Paths.get(stage))
+    // the reported attempt 3 vs a KILLED attempt 9 that wrote more bytes
+    // but never returned a result — it must not be published
+    Files.write(Paths.get(s"$stage/x.tgz.a3"), "COMPLETE".getBytes)
+    Files.write(Paths.get(s"$stage/x.tgz.a9"), "TRUNCATED-BUT-LONGER".getBytes)
+    // a second final name whose only attempt is unreported: nothing published
+    Files.write(Paths.get(s"$stage/y.tgz.a1"), "DEAD".getBytes)
 
-    TgzSink.commit(spark, Seq(s"$outDir/_tmp"), sconf())
+    TgzSink.commit(spark, Seq(stage),
+      Seq(StagedHalf(stage, "x.tgz", 0, "x.tgz.a3")), sconf())
 
     assert(Files.readString(Paths.get(s"$outDir/x.tgz")) === "COMPLETE")
     assert(!Files.exists(Paths.get(s"$outDir/y.tgz")))
-    assert(!Files.exists(Paths.get(s"$outDir/_tmp"))) // staging cleaned up
+    assert(!Files.exists(Paths.get(stage))) // staging cleaned up
   }
 
-  test("commit picks the latest marked attempt of duplicate successes") {
-    val outDir = Files.createTempDirectory("graft-commit2").toString
-    Files.createDirectories(Paths.get(s"$outDir/_tmp"))
-    Files.write(Paths.get(s"$outDir/_tmp/z.tgz.p2.a4.done"), "EARLY".getBytes)
-    Files.write(Paths.get(s"$outDir/_tmp/z.tgz.p2.a7.done"), "LATE".getBytes)
-
-    TgzSink.commit(spark, Seq(s"$outDir/_tmp"), sconf())
-
-    assert(Files.readString(Paths.get(s"$outDir/z.tgz")) === "LATE")
-  }
-
-  test("CopyCommit publishes from marker files with copy-then-verify") {
+  test("CopyCommit publishes a reported half with copy-then-verify") {
     val outDir = Files.createTempDirectory("graft-commit-cp").toString
-    Files.createDirectories(Paths.get(s"$outDir/_tmp"))
-    // marker-file protocol: the data file sits beside a zero-byte marker
-    Files.write(Paths.get(s"$outDir/_tmp/x.tgz.p0.a3"), "COMPLETE".getBytes)
-    Files.write(Paths.get(s"$outDir/_tmp/x.tgz.p0.a3.done"), "k".getBytes)
-    // unmarked mid-write debris must still lose
-    Files.write(Paths.get(s"$outDir/_tmp/x.tgz.p0.a9"), "TRUNCATED-LONGER".getBytes)
+    val stage = s"$outDir/_tmp"
+    Files.createDirectories(Paths.get(stage))
+    Files.write(Paths.get(s"$stage/x.tgz.a3"), "COMPLETE".getBytes)
+    // unreported mid-write debris must still lose
+    Files.write(Paths.get(s"$stage/x.tgz.a9"), "TRUNCATED-LONGER".getBytes)
 
-    TgzSink.commit(spark, Seq(s"$outDir/_tmp"), sconf(), CopyCommit)
+    TgzSink.commit(spark, Seq(stage),
+      Seq(StagedHalf(stage, "x.tgz", 0, "x.tgz.a3")), sconf(), CopyCommit)
 
     assert(Files.readString(Paths.get(s"$outDir/x.tgz")) === "COMPLETE")
-    assert(!Files.exists(Paths.get(s"$outDir/_tmp")))
+    assert(!Files.exists(Paths.get(stage)))
   }
 
   test("CopyCommit end-to-end split on a store with NO working rename") {
@@ -103,7 +94,7 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
     assert(listing("public") === Set(base))
     assert(listing("embargoed") === Set(privBase))
 
-    // non-vacuity: the rename-marking protocol on the same store fails —
+    // non-vacuity: the rename protocol on the same store fails —
     // the wrapper really has no rename, so a green CopyCommit run proves
     // the path is rename-free end to end
     val out2 = s"nar://${Files.createTempDirectory("graft-nar2")}"
@@ -146,16 +137,60 @@ class TgzSinkCommitSpec extends AnyFunSuite with SparkSuite {
     assert(CommitProtocol.forPath("hdfs://nn/dir", conf) === RenameCommit)
   }
 
-  test("commit still rejects a final name marked by two partitions") {
+  test("commit rejects a final name reported by two partitions") {
     val outDir = Files.createTempDirectory("graft-commit3").toString
-    Files.createDirectories(Paths.get(s"$outDir/_tmp"))
-    Files.write(Paths.get(s"$outDir/_tmp/w.tgz.p0.a1.done"), "P0".getBytes)
-    Files.write(Paths.get(s"$outDir/_tmp/w.tgz.p1.a2.done"), "P1".getBytes)
+    val stage = s"$outDir/_tmp"
+    Files.createDirectories(Paths.get(stage))
+    Files.write(Paths.get(s"$stage/w.tgz.a1"), "P0".getBytes)
+    Files.write(Paths.get(s"$stage/w.tgz.a2"), "P1".getBytes)
 
     val e = intercept[IllegalStateException] {
-      TgzSink.commit(spark, Seq(s"$outDir/_tmp"), sconf())
+      TgzSink.commit(spark, Seq(stage), Seq(
+        StagedHalf(stage, "w.tgz", 0, "w.tgz.a1"),
+        StagedHalf(stage, "w.tgz", 1, "w.tgz.a2")), sconf())
     }
     assert(e.getMessage.contains("split across partitions"))
     assert(!Files.exists(Paths.get(s"$outDir/w.tgz")))
+    assert(!Files.exists(Paths.get(stage)))
+  }
+
+  test("writeSplit runs exactly two jobs: the write and the publish") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val outDir = Files.createTempDirectory("graft-commit-jobs").toString
+    val t = new java.sql.Timestamp(0L)
+    // a local routed Dataset: no scan, no broadcast — only the sink's jobs.
+    // One partition keeps the archive's rows in one task
+    val routed = Seq(
+      ("a.tgz", 0L, "a/pub.web100", 1L, 420L, t, "0", Array[Byte](1), "public"),
+      ("a.tgz", 1L, "a/priv.web100", 1L, 420L, t, "0", Array[Byte](2), "private"))
+      .toDF("archive", "ordinal", "name", "size", "mode", "modTime", "typeflag",
+        "content", "route").coalesce(1)
+    val (group, sentinel) = ("tgz-sink-jobs", "tgz-sink-jobs-sentinel")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`sentinel`) => drained.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "writeSplit")
+      try TgzSink.writeSplit(routed, outDir) finally sc.clearJobGroup()
+      // the bus delivers events in order: once the sentinel job's start
+      // arrives, every job writeSplit launched has been counted
+      sc.setJobGroup(sentinel, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get() === 2)
+      assert(Files.list(Paths.get(outDir)).toArray
+        .map(_.toString.split('/').last).filterNot(_.startsWith(".")).toSet ===
+        Set("a.tgz", "a-e.tgz"))
+    } finally sc.removeSparkListener(listener)
   }
 }
